@@ -85,9 +85,8 @@ _SIDECAR_FP_COLS = ["term", "doc_ids", "tfs", "dls"]
 def fingerprint_expr(cols: list[str]):
     """The aggregate expression behind _table_fingerprint, exposed so a
     job that already scans the rows can compute the fingerprint as an
-    ``observe`` metric instead of paying a second scan (write_index's
-    dictionary stage hosts the segment fingerprint this way; the
-    champions write hosts its own sidecar stamp). Exact integer math
+    ``observe`` metric instead of paying a second scan (the champions
+    write hosts its own sidecar stamp this way). Exact integer math
     (xxhash64 summed in decimal(38,0)), so the observed value equals
     the standalone recompute bit-for-bit."""
     return F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("fp")
@@ -126,21 +125,16 @@ def default_min_df(n_docs: int) -> int:
     return max(256, n_docs // 100)
 
 
-def head_terms(
-    df_source: DataFrame, min_df: int, max_terms: int, df_col: str = "df"
-) -> list[str]:
+def head_terms(segments: DataFrame, min_df: int, max_terms: int) -> list[str]:
     """The championed vocabulary: terms with df_global >= min_df,
     capped at max_terms (df_global DESC, term tiebreak — deterministic).
-    ``df_source`` is either the persisted dictionary (term, df_global —
-    already aggregated, the cheap path write_index uses) or the raw
-    segment-row table (per-shard df rows, summed here). Bounded driver
-    fetch: at most max_terms strings."""
-    if "df_global" in df_source.columns:
-        agg = df_source.select("term", "df_global")
-    else:
-        agg = df_source.groupBy("term").agg(F.sum(df_col).alias("df_global"))
+    df_global is summed from the per-shard df of the segment rows — the
+    same value the dictionary materializes, without waiting for it.
+    Bounded driver fetch: at most max_terms strings."""
     rows = (
-        agg.filter(F.col("df_global") >= min_df)
+        segments.groupBy("term")
+        .agg(F.sum("df").alias("df_global"))
+        .filter(F.col("df_global") >= min_df)
         .orderBy(F.desc("df_global"), F.asc("term"))
         .limit(max_terms)
         .select("term")
@@ -262,14 +256,11 @@ def write_champions(
     budget: int = 64,
     min_df: int | None = None,
     max_terms: int = 1024,
-    dictionary: DataFrame | None = None,
-    seg_fp: int | None = None,
 ) -> int:
     """Build + persist the sidecar; returns the number of championed
-    terms. ``min_df=None`` -> default_min_df(n_docs). Pass the
-    persisted ``dictionary`` when one exists (write_index does): head
-    selection then reads the tiny (term, df_global) table instead of
-    re-aggregating the segment rows. Writes champions_meta.json with
+    terms. ``min_df=None`` -> default_min_df(n_docs). Head terms and
+    the segment stamp both come from the segment rows, so this never
+    waits for the dictionary. Writes champions_meta.json with
     TWO stamps: the segment fingerprint (are these still the segments
     the sidecar was derived from?) and a sidecar content hash (is this
     parquet the one that was stamped?) — ChampionClient requires both
@@ -278,18 +269,14 @@ def write_champions(
     can make pruning unsound.
 
     Job economy: the sidecar stamp rides the write itself as an
-    ``observe`` metric (no read-back scan), and ``seg_fp`` accepts a
-    segment fingerprint the caller already observed on a job that
-    scanned the rows anyway (write_index's dictionary stage does) —
-    with it, the whole stage is two Spark jobs (heads fetch + skim/
-    write) instead of four."""
+    ``observe`` metric (no read-back scan) — three Spark jobs: heads
+    fetch, skim/write, segment fingerprint."""
     from pyspark.sql import Observation
 
     if min_df is None:
         min_df = default_min_df(n_docs)
     out = Path(out_dir) / "champions"
-    heads = head_terms(dictionary if dictionary is not None else segments,
-                       min_df, max_terms)
+    heads = head_terms(segments, min_df, max_terms)
     ch = build_champions(
         segments, avgdl, budget=budget, min_df=min_df, max_terms=max_terms,
         heads=heads,
@@ -298,8 +285,11 @@ def write_champions(
     # the map-side cut) no matter the corpus size, so AQE's per-stage
     # materialize-and-replan only adds latency here (measured ~2x the
     # write wall at sf0.1) and its skew/coalesce help can never apply.
-    # Conf flips are session-wide: write_champions runs in the
-    # single-threaded build/merge orchestration, restored in finally.
+    # Conf flips are session-wide and restored in finally: only stages
+    # whose output is unaffected by AQE or shuffle.partitions may
+    # overlap this write (derived_stages runs it beside the dictionary
+    # aggregation, whose rows neither setting changes; every other
+    # build stage that writes has finished).
     conf = segments.sparkSession.conf
     prev_aqe = conf.get("spark.sql.adaptive.enabled")
     prev_sp = conf.get("spark.sql.shuffle.partitions")
@@ -315,7 +305,7 @@ def write_champions(
         conf.set("spark.sql.shuffle.partitions", prev_sp)
     meta = {
         "format": CHAMPION_FORMAT,
-        "fingerprint": segment_fingerprint(segments) if seg_fp is None else seg_fp,
+        "fingerprint": segment_fingerprint(segments),
         "sidecar_fingerprint": _fp_mod(obs.get["fp"]),
     }
     (Path(out_dir) / "champions_meta.json").write_text(json.dumps(meta))

@@ -249,19 +249,6 @@ def cmd_serve(args) -> None:
             f.result()
 
 
-def cmd_upgrade(args) -> None:
-    """Format-1 -> format-2 re-encode without the source corpus
-    (index.upgrade_index): merge-of-one over the old segments,
-    sidecars re-derived/copied."""
-    from searty_spark.index import upgrade_index
-    from searty_spark.session import get_spark
-
-    spark = get_spark(cpus=args.cpus, app_name="searty-upgrade")
-    t0 = time.perf_counter()
-    stats = upgrade_index(spark, args.index, args.out)
-    print(json.dumps({"wall_sec": time.perf_counter() - t0, **stats}))
-
-
 def cmd_merge(args) -> None:
     from searty_spark.merge import compact_partials, merge_indexes
     from searty_spark.session import get_spark
@@ -622,11 +609,6 @@ def main(argv=None) -> None:
                     help="answer up to N requests concurrently "
                          "(responses in completion order, tagged seq)")
     sv.set_defaults(fn=cmd_serve)
-
-    up = sub.add_parser("upgrade")
-    up.add_argument("--index", required=True, help="format-1 index dir")
-    up.add_argument("--out", required=True)
-    up.set_defaults(fn=cmd_upgrade)
 
     q = sub.add_parser("query")
     q.add_argument("--index", required=True)

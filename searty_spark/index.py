@@ -16,10 +16,18 @@ resumes from the last committed unit):
                               tokenizer into the segment encoder —
                               no postings intermediate; see
                               segments.build_segments_from_tokens)
-    <dir>/stats.json          {n_docs, avgdl, sum_dl, n_shards, n_buckets}
-    <dir>/checkpoint.jsonl    one line per committed unit + metrics
-                              (stage, shard, wall_sec, rows, docs_per_sec)
+    <dir>/champions/          per-head-term champion lists (+
+                              champions_meta.json stamps), DERIVED from
+                              the segment rows like the dictionary
+    <dir>/stats.json          {format, analyzer, n_docs, avgdl, sum_dl,
+                              n_shards, n_buckets}
+    <dir>/checkpoint.jsonl    one line per committed unit:
+                              {unit, ts, wall_sec[, rows]} — unit is
+                              docstats | symbols | documents |
+                              segments/shards=A-B | dictionary | champions
 
+The build is one stage table (write_index) run by run_stages; the
+dictionary + champion stages (derived_stages) are shared with merge.
 Resume: completed units are read from checkpoint.jsonl and skipped;
 a unit's data write is idempotent (mode=overwrite of its own subtree)
 so a crash between data-commit and checkpoint-append just redoes one
@@ -37,7 +45,6 @@ import json
 import time
 from pathlib import Path
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -92,61 +99,137 @@ def _done_units(out_dir: str) -> set[str]:
     return {json.loads(line)["unit"] for line in p.read_text().splitlines() if line}
 
 
-_CKPT_LOCK = __import__("threading").Lock()
-
-
 def _commit(out_dir: str, unit: str, **metrics) -> None:
     rec = {"unit": unit, "ts": time.time(), **metrics}
-    # stages 1/1b commit from concurrent threads (write_index) — the
-    # lock keeps the jsonl line-atomic within this process
-    with _CKPT_LOCK, _ckpt_path(out_dir).open("a") as f:
+    with _ckpt_path(out_dir).open("a") as f:
         f.write(json.dumps(rec) + "\n")
 
 
-def _unit_metric(out_dir: str, unit: str, key: str):
-    """A metric a completed unit committed (last record wins), or None
-    — resume's way to reuse e.g. the observed segment fingerprint
-    without re-scanning."""
-    p = _ckpt_path(out_dir)
-    if not p.exists():
-        return None
-    val = None
-    for line in p.read_text().splitlines():
-        if line:
-            rec = json.loads(line)
-            if rec["unit"] == unit and key in rec:
-                val = rec[key]
-    return val
+def run_stages(stages: list, done=frozenset(), ckpt_dir: str | None = None) -> dict:
+    """Run a stage table on one thread pool; returns {unit: wall_sec}.
+
+    A stage is ``(unit, deps, fn)``. It starts once every stage of each
+    unit named in ``deps`` has finished; the stages of a unit in
+    ``done`` are skipped and count as finished. Several stages may share
+    a unit: once the last of them finishes, the unit commits ONE
+    checkpoint record to ``ckpt_dir`` (when given) — its wall since its
+    first stage started, plus the metrics dicts its stages returned.
+    Unit None commits nothing. Commits happen on the calling thread, so
+    the jsonl stays line-atomic without a lock.
+
+    After a failure no further stage starts; the running ones finish
+    (and commit), then the first error is re-raised — a resume redoes
+    only the failed unit and what depends on it."""
+    import concurrent.futures as cf
+    from collections import Counter
+
+    todo = [s for s in stages if s[0] not in done]
+    left = Counter(unit for unit, _, _ in todo)  # unfinished stages per unit
+    started: dict = {}
+    metrics: dict = {}
+    walls: dict[str, float] = {}
+    running: dict = {}
+    error: BaseException | None = None
+    # one thread per stage: every ready stage starts at once, so the
+    # table alone decides the overlap
+    with cf.ThreadPoolExecutor(max_workers=max(1, len(todo))) as pool:
+        while running or (todo and error is None):
+            ready = [] if error else [s for s in todo if not any(left[d] for d in s[1])]
+            for s in ready:
+                todo.remove(s)
+                started.setdefault(s[0], time.perf_counter())
+                running[pool.submit(s[2])] = s[0]
+            if not running:
+                raise RuntimeError(f"stage table has a cycle: {[s[0] for s in todo]}")
+            finished, _ = cf.wait(running, return_when=cf.FIRST_COMPLETED)
+            for f in finished:
+                unit = running.pop(f)
+                if f.exception() is not None:
+                    error = error or f.exception()
+                    continue
+                metrics.setdefault(unit, {}).update(f.result() or {})
+                left[unit] -= 1
+                if unit is not None and not left[unit]:
+                    walls[unit] = time.perf_counter() - started[unit]
+                    if ckpt_dir is not None:
+                        _commit(ckpt_dir, unit, wall_sec=walls[unit], **metrics[unit])
+    if error is not None:
+        raise error
+    return walls
+
+
+def derived_stages(
+    spark: SparkSession, out_dir: str, after=(), champions: bool = True
+) -> list:
+    """The dictionary and champion-sidecar stages of the index at
+    ``out_dir``, both starting after the ``after`` units — the one
+    derivation write_index, merge_indexes and _merge_dedup share. Both
+    read only the WRITTEN segment rows (+ stats.json), never each
+    other, so they overlap: the champion head terms sum per-shard df
+    from the segment rows (the same df_global the dictionary
+    materializes) and the champion stamp scans the segment fingerprint
+    itself."""
+
+    def dictionary():
+        # global df of a term = sum of its per-shard dfs (doc sets
+        # disjoint); aggregates the tiny (n_terms x n_shards) segment-row
+        # table, not the token stream. The term count rides the write as
+        # an observe metric — no read-back job.
+        from pyspark.sql import Observation
+
+        obs = Observation("dict_rows")
+        (
+            load_segments(spark, out_dir)
+            .groupBy("term")
+            .agg(F.sum("df").cast("long").alias("df_global"))
+            .select("term", F.xxhash64("term").alias("token_id"), "df_global")
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .write.mode("overwrite")
+            .parquet(str(Path(out_dir) / "dictionary"))
+        )
+        return {"rows": int(obs.get["n"])}
+
+    def champion_lists():
+        # per-head-term top-B postings by impact (stats-free: (doc, tf,
+        # dl) rows, scores recomputed at query time) — seeds MaxScore's
+        # theta (champions.py for the safety argument). Tail corpora
+        # produce an empty sidecar (no head terms).
+        from searty_spark.champions import write_champions
+
+        stats = load_stats(out_dir)
+        n = write_champions(
+            load_segments(spark, out_dir), out_dir, stats["n_docs"], stats["avgdl"]
+        )
+        return {"rows": n}
+
+    after = tuple(after)
+    return [("dictionary", after, dictionary)] + (
+        [("champions", after, champion_lists)] if champions else []
+    )
 
 
 def _prewarm_python_workers(spark: SparkSession) -> None:
-    """Warm one reusable Python worker per core in the background (see
-    write_index). Thread-safe: job descriptions/groups are thread-local
-    in Spark, so the prewarm job never relabels the caller's jobs."""
-    import threading
+    """Warm one reusable Python worker per core (see write_index).
+    Best-effort: failure costs nothing, the encoder pays the spin-up."""
+    try:
+        n = spark.sparkContext.defaultParallelism
 
-    def _go():
-        try:
-            n = spark.sparkContext.defaultParallelism
+        def _touch(batches):
+            import numpy  # noqa: F401  — the encoder's imports
+            import pandas  # noqa: F401
 
-            def _touch(batches):
-                import numpy  # noqa: F401  — the encoder's imports
-                import pandas  # noqa: F401
+            yield from batches
 
-                yield from batches
-
-            (
-                spark.range(n)
-                .repartition(n)
-                .mapInPandas(_touch, "id long")
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
-            )
-        except Exception:
-            pass  # best-effort; the real stage pays the spin-up instead
-
-    threading.Thread(target=_go, daemon=True).start()
+        (
+            spark.range(n)
+            .repartition(n)
+            .mapInPandas(_touch, "id long")
+            .write.format("noop")
+            .mode("overwrite")
+            .save()
+        )
+    except Exception:
+        pass
 
 
 def write_index(
@@ -168,7 +251,8 @@ def write_index(
     kind-aware lexical scanner, whose token identity is the
     (kind, term) composite (see LISP_KIND_SEP). The lisp doc length is
     the document's TOKEN count (trigram doc_len is char-derived), so
-    stage 1 runs one extra tokenize pass; query with query_index_lisp.
+    the docstats stage runs one extra tokenize pass; query with
+    query_index_lisp.
 
     ``store_docs`` additionally persists (doc_id, url, text) — the
     analogue of the reference's ``document`` table (schema.sql:1-8)
@@ -186,22 +270,11 @@ def write_index(
     if analyzer not in ("trigram", "lisp"):
         raise ValueError(f"unknown analyzer {analyzer!r} (trigram | lisp)")
     spark = corpus.sparkSession
-    # Overlap Python-worker spin-up with the pure-JVM early stages
-    # (guide §2.6, overlapping independent jobs): the first
-    # applyInPandas stage (segments) otherwise pays daemon fork +
-    # numpy/pandas import for every core inside its own wall. A
-    # background thread runs one trivial mapInPandas job across the
-    # session's cores while docstats/symbols (no Python) execute, so
-    # the worker pool is warm (spark.python.worker.reuse) by the time
-    # the encoder needs it. Fire-and-forget: failure or a tardy finish
-    # costs nothing — the job's output is discarded.
-    _prewarm_python_workers(spark)
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
     done = _done_units(out_dir) if resume else set()
     if not resume and _ckpt_path(out_dir).exists():
         _ckpt_path(out_dir).unlink()
-    metrics: dict[str, float] = {}
 
     # the document-identity key (ref: document.filename) rides along in
     # docstats — it is what shared-identity merge dedups on
@@ -212,14 +285,21 @@ def write_index(
         if key_col is not None and key_col not in corpus.columns:
             raise ValueError(f"doc_key column {key_col!r} not in corpus")
 
-    # --- stages 1 + 1b: doc stats and the symbol sidecar ------------------
-    # Independent stages (both pure functions of the corpus, writing
-    # disjoint subtrees, committing separate units) run CONCURRENTLY
-    # from a 2-thread pool (guide §2.6): their jobs back-fill each
-    # other's stragglers instead of serializing two corpus passes.
-    # Resume semantics are unchanged — the done-units set is unordered.
-    def run_docstats():
-        t0 = time.perf_counter()
+    if "docstats" in done:
+        # resuming: fail fast on a foreign format (load_stats) or a mixed
+        # analyzer BEFORE any stage runs — resuming a trigram checkpoint
+        # with analyzer="lisp" would skip the char-derived docstats stage
+        # and then join lisp tokens onto trigram doc lengths
+        prior = load_stats(out_dir).get("analyzer", "trigram")
+        if prior != analyzer:
+            raise ValueError(
+                f"index at {out_dir} was started with analyzer={prior!r}; "
+                f"resuming with {analyzer!r} would mix analyzers — use a "
+                "fresh out_dir or resume with the original analyzer"
+            )
+
+    # --- docstats: (doc_id, doc_len[, key, lang]) + stats.json -----------
+    def docstats():
         # one narrow projection, no join: doc_len is an expression over
         # the text column and key/lang ride along from the same row
         extra = ([F.col(key_col).alias("key")] if key_col else []) + (
@@ -253,8 +333,7 @@ def write_index(
                 *extra,
             )
         # the corpus scalars ride the write itself as observe metrics —
-        # no read-back aggregation job (same trick as the dictionary
-        # stage's segment fingerprint)
+        # no read-back aggregation job
         from pyspark.sql import Observation
 
         obs_ds = Observation("docstats_scalars")
@@ -275,114 +354,81 @@ def write_index(
             "n_buckets": n_buckets,
         }
         (out / "stats.json").write_text(json.dumps(stats))
-        wall = time.perf_counter() - t0
-        _commit(out_dir, "docstats", wall_sec=wall, rows=stats["n_docs"],
-                docs_per_sec=stats["n_docs"] / wall)
+        return {"rows": stats["n_docs"]}
 
-    # stage 1b body: the analogue of the reference's symbol/package/
-    # symbol_definition/package_definition tables (schema.sql:26-64),
-    # persisted next to the segments so `query --symbol` never touches
-    # the corpus. Only emitted when the corpus carries a lang column
-    # (the package analogue).
-    def run_symbols():
-        t0 = time.perf_counter()
+    # --- symbols: the symbol/package sidecar, three independent writes ----
+    # the analogue of the reference's symbol/package/symbol_definition/
+    # package_definition tables (schema.sql:26-64), persisted next to the
+    # segments so `query --symbol` never touches the corpus. Only emitted
+    # when the corpus carries a lang column (the package analogue). The
+    # two symbol tables each recompute the sites explode — with the
+    # stepped-sequence extraction (symbols.py) the recompute (~0.8 s at
+    # sf1.0) is cheaper than cache materialization (measured: cold cache
+    # 6.1 s vs recompute 2.6 s for the stage; warm a wash), and no
+    # storage stays pinned.
+    def write_entity():
+        from searty_spark.symbols import _definition_sites
+
+        # entity tables are small by construction (distinct symbols /
+        # packages, not per-occurrence rows) — coalesce so local runs
+        # don't write shuffle.partitions-many near-empty files. distinct
+        # BEFORE the md5: the surrogate id is a pure function of
+        # (package_name, symbol_name), so hashing after the distinct
+        # computes ~n_symbols md5s instead of one per occurrence row.
+        _definition_sites(corpus).select(
+            F.col("symbol_name").alias("name"), "package_name"
+        ).distinct().select(
+            F.md5(F.concat_ws(":", F.col("package_name"), F.col("name"))).alias("id"),
+            "name",
+            "package_name",
+        ).coalesce(4).write.mode("overwrite").parquet(str(out / "symbols"))
+
+    def write_defs():
         from searty_spark.symbols import _definition_sites, _symbol_id
 
-        # the two symbol tables each recompute the sites explode — with
-        # the stepped-sequence extraction (symbols.py) the recompute
-        # (~0.8 s at sf1.0) is cheaper than cache materialization
-        # (measured: cold cache 6.1 s vs recompute 2.6 s for the stage;
-        # warm a wash), and no storage stays pinned
-        sites = _definition_sites(corpus)
+        # the per-occurrence definitions table keeps its partitioning
+        _definition_sites(corpus).select(
+            _symbol_id().alias("symbol_id"), "specifier", "doc_id", "position"
+        ).write.mode("overwrite").parquet(str(out / "symbol_definitions"))
 
-        def write_entity():
-            # entity tables are small by construction (distinct symbols
-            # / packages, not per-occurrence rows) — coalesce so local
-            # runs don't write shuffle.partitions-many near-empty
-            # files. distinct BEFORE the md5: the surrogate id is a
-            # pure function of (package_name, symbol_name), so hashing
-            # after the distinct computes ~n_symbols md5s instead of
-            # one per occurrence row.
-            sites.select(
-                F.col("symbol_name").alias("name"), "package_name"
-            ).distinct().select(
-                F.md5(F.concat_ws(":", F.col("package_name"), F.col("name"))).alias(
-                    "id"
-                ),
-                "name",
-                "package_name",
-            ).coalesce(4).write.mode("overwrite").parquet(str(out / "symbols"))
+    def write_packages():
+        # nb: the package tables are bounded by the number of distinct
+        # languages, but collecting them and writing via
+        # spark.createDataFrame is NOT a shortcut here — local-relation
+        # parquet writes cost 4-7 s each in this environment (measured)
+        # versus ~0.45 s per corpus-aggregation write. Both tables
+        # project from ONE corpus aggregation (distinct langs with their
+        # min doc_id — a superset of package_table's key set and exactly
+        # package_definitions' rows), checkpointed because it is bounded
+        # by the language count, so the corpus is scanned once here
+        # instead of twice.
+        pk = (
+            corpus.groupBy(F.upper("lang").alias("name"))
+            .agg(F.min("doc_id").alias("doc_id"))
+            .localCheckpoint(eager=True)
+        )
+        pk.select(F.md5("name").alias("id"), "name").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(str(out / "packages"))
+        pk.select(
+            F.md5("name").alias("package_id"),
+            F.lit("DEFPACKAGE").alias("specifier"),
+            "doc_id",
+            F.lit(0).cast("long").alias("position"),
+        ).coalesce(1).write.mode("overwrite").parquet(str(out / "package_definitions"))
 
-        def write_defs():
-            # the per-occurrence definitions table keeps its partitioning
-            sites.select(
-                _symbol_id().alias("symbol_id"), "specifier", "doc_id", "position"
-            ).write.mode("overwrite").parquet(str(out / "symbol_definitions"))
+    def write_documents():
+        cols = ["doc_id"] + [c for c in ("url",) if c in corpus.columns] + [text_col]
+        corpus.select(*cols).write.mode("overwrite").parquet(str(out / "documents"))
 
-        def write_packages():
-            # nb: the package tables are bounded by the number of
-            # distinct languages, but collecting them and writing via
-            # spark.createDataFrame is NOT a shortcut here —
-            # local-relation parquet writes cost 4-7 s each in this
-            # environment (measured) versus ~0.45 s per
-            # corpus-aggregation write. Both tables project from ONE
-            # corpus aggregation (distinct langs with their min doc_id
-            # — a superset of package_table's key set and exactly
-            # package_definitions' rows), checkpointed because it is
-            # bounded by the language count, so the corpus is scanned
-            # once here instead of twice.
-            pk = (
-                corpus.groupBy(F.upper("lang").alias("name"))
-                .agg(F.min("doc_id").alias("doc_id"))
-                .localCheckpoint(eager=True)
-            )
-            pk.select(F.md5("name").alias("id"), "name").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(str(out / "packages"))
-            pk.select(
-                F.md5("name").alias("package_id"),
-                F.lit("DEFPACKAGE").alias("specifier"),
-                "doc_id",
-                F.lit(0).cast("long").alias("position"),
-            ).coalesce(1).write.mode("overwrite").parquet(
-                str(out / "package_definitions")
-            )
-
-        # the four sidecar writes are independent jobs over disjoint
-        # output dirs — overlap them (guide §2.6) instead of paying
-        # four sequential job walls
-        import concurrent.futures as cf
-
-        with cf.ThreadPoolExecutor(max_workers=3) as wpool:
-            for f in [
-                wpool.submit(write_entity),
-                wpool.submit(write_defs),
-                wpool.submit(write_packages),
-            ]:
-                f.result()
-        _commit(out_dir, "symbols", wall_sec=time.perf_counter() - t0)
-
-    if "docstats" in done:
-        # resuming: fail fast on a foreign format / mixed analyzer
-        # BEFORE any further stage runs (see the check below)
-        prior = load_stats(out_dir)
-        if prior.get("analyzer", "trigram") != analyzer:
-            raise ValueError(
-                f"index at {out_dir} was started with analyzer="
-                f"{prior.get('analyzer', 'trigram')!r}; resuming with "
-                f"{analyzer!r} would mix analyzers — use a fresh out_dir "
-                "or resume with the original analyzer"
-            )
-
-    # Web text compresses ~10x in parquet and explodes ~3x at tokenize
-    # time, so input splits sized for scan parallelism are far too
-    # coarse for the tokenize stages — spread the corpus first.
-    target = spark.sparkContext.defaultParallelism
-    src = corpus
-    if corpus.rdd.getNumPartitions() < target:
-        src = corpus.repartition(target)
-
+    # --- segments, in resumable shard batches -----------------------------
     def tokens_with_len():
+        from searty_spark.session import spread_input
+
+        # Web text compresses ~10x in parquet and explodes ~3x at
+        # tokenize time, so input splits sized for scan parallelism are
+        # far too coarse for the tokenize stages — spread the corpus.
+        src = spread_input(corpus)
         if analyzer == "lisp":
             from searty_spark.lisp_tokenizer import lisp_token_rows
 
@@ -405,176 +451,56 @@ def write_index(
             F.posexplode(trigrams_col(text_col)).alias("pos", "term"),
         )
 
-    # --- stage 3 body: segments, in resumable shard batches ---------------
-    # Default: ONE job covering every shard (dynamic partition
-    # overwrite makes the unit write idempotent). shard_batch < n_shards
-    # trades throughput for finer resume granularity — at 10^12 docs a
-    # batch is the unit a preempted cluster re-runs. For the TRIGRAM
-    # analyzer the token stream derives from the corpus alone (doc_len
-    # is an expression over text), so this runs CONCURRENTLY with
-    # stages 1/1b — corpus stats are only needed for the commit's
-    # throughput metric, fetched via ``get_stats`` (which waits for the
-    # docstats future) after the data write. The lisp analyzer's token
-    # lengths JOIN the docstats table, so it stays sequential.
-    def run_segments(get_stats):
-        batch = shard_batch or n_shards
-        sdone = _done_units(out_dir) if resume else set()
+    def write_segments(lo: int, hi: int):
         from searty_spark.segments import build_segments_from_tokens
 
-        for lo in range(0, n_shards, batch):
-            hi = min(lo + batch, n_shards)
-            unit = f"segments/shards={lo}-{hi - 1}"
-            if unit in sdone:
-                continue
-            t0 = time.perf_counter()
-            toks = tokens_with_len().filter(
-                F.pmod(F.col("doc_id"), F.lit(n_shards)).between(lo, hi - 1)
-            )
-            seg = build_segments_from_tokens(
-                toks,
-                n_shards=n_shards,
-                n_buckets=n_buckets,
-            )
-            seg.write.partitionBy("shard", "bucket").mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(str(out / "segments"))
-            wall = time.perf_counter() - t0
-            # dense doc_ids spread uniformly over shards by pmod
-            n_docs_part = get_stats()["n_docs"] * (hi - lo) // n_shards
-            _commit(
-                out_dir,
-                unit,
-                wall_sec=wall,
-                docs=n_docs_part,
-                docs_per_sec=n_docs_part / wall if wall else 0.0,
-            )
-            metrics[unit] = wall
-
-    import concurrent.futures as cf
-
-    with cf.ThreadPoolExecutor(max_workers=3) as pool:
-        f_ds = pool.submit(run_docstats) if "docstats" not in done else None
-        f_sym = (
-            pool.submit(run_symbols)
-            if "lang" in corpus.columns and "symbols" not in done
-            else None
+        toks = tokens_with_len().filter(
+            F.pmod(F.col("doc_id"), F.lit(n_shards)).between(lo, hi - 1)
         )
+        # dynamic partition overwrite makes the unit write idempotent
+        build_segments_from_tokens(
+            toks, n_shards=n_shards, n_buckets=n_buckets
+        ).write.partitionBy("shard", "bucket").mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(str(out / "segments"))
 
-        def get_stats():
-            if f_ds is not None:
-                f_ds.result()  # surfaces a docstats failure here too
-            return load_stats(out_dir)
-
-        f_seg = pool.submit(run_segments, get_stats) if analyzer == "trigram" else None
-        for f in (f_ds, f_sym, f_seg):
-            if f is not None:
-                f.result()
-
-    # load_stats (not a raw read) so resuming over a foreign-format
-    # index dir fails fast instead of skipping relocated stages
-    stats = load_stats(out_dir)
-    if stats.get("analyzer", "trigram") != analyzer:
-        # resuming a trigram checkpoint with analyzer="lisp" would skip
-        # the char-derived docstats stage and then join lisp tokens onto
-        # trigram doc lengths — a silently inconsistent index
-        raise ValueError(
-            f"index at {out_dir} was started with analyzer="
-            f"{stats.get('analyzer', 'trigram')!r}; resuming with "
-            f"{analyzer!r} would mix analyzers — use a fresh out_dir or "
-            "resume with the original analyzer"
-        )
-
-    if store_docs and "documents" not in done:
-        t0 = time.perf_counter()
-        cols = ["doc_id"] + [c for c in ("url",) if c in corpus.columns] + [text_col]
-        corpus.select(*cols).write.mode("overwrite").parquet(str(out / "documents"))
-        _commit(out_dir, "documents", wall_sec=time.perf_counter() - t0,
-                rows=stats["n_docs"])
-
-    if analyzer == "lisp":
-        run_segments(lambda: stats)
-
-    # --- stage 3: dictionary, DERIVED from the segment rows ---------------
-    # global df of a term = sum of its per-shard dfs (doc sets disjoint);
-    # this aggregates the tiny (n_terms x n_shards) segment-row table, not
-    # the token stream — the second tokenize pass the old design needed is
-    # gone entirely.
-    done = _done_units(out_dir) if resume else set()
-    need_dict = "dictionary" not in done
-    need_champ = "champions" not in done
-    seg_fp: int | None = None
-
-    def run_dictionary() -> int:
-        from pyspark.sql import Observation
-
-        from searty_spark.champions import (
-            _SEGMENT_FP_COLS,
-            _fp_mod,
-            fingerprint_expr,
-        )
-
-        t0 = time.perf_counter()
-        # observe metrics ride the single dictionary job: the SEGMENT
-        # fingerprint (stage 4's sidecar stamp — this job scans every
-        # segment row anyway) on the pre-agg rows, the term count on
-        # the post-agg rows. No read-back job, no second segment scan.
-        obs_fp = Observation("segment_fp")
-        obs_n = Observation("dict_rows")
-        d = (
-            load_segments(spark, out_dir)
-            .observe(obs_fp, fingerprint_expr(_SEGMENT_FP_COLS))
-            .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df_global"))
-            .select("term", F.xxhash64("term").alias("token_id"), "df_global")
-            .observe(obs_n, F.count(F.lit(1)).alias("n"))
-        )
-        d.write.mode("overwrite").parquet(str(out / "dictionary"))
-        wall = time.perf_counter() - t0
-        fp = _fp_mod(obs_fp.get["fp"])
-        _commit(
-            out_dir, "dictionary",
-            wall_sec=wall, rows=int(obs_n.get["n"]), segment_fp=fp,
-        )
-        return fp
-
-    # --- stage 4: champion lists, DERIVED like the dictionary ------------
-    # per-head-term top-B postings by impact (stats-free: (doc, tf, dl)
-    # rows, scores recomputed at query time) — seeds MaxScore's theta so
-    # the seed term stops decoding early (champions.py for the safety
-    # argument). Tail corpora produce an empty sidecar (no head terms).
-    def run_champions(dictionary, fp):
-        t0 = time.perf_counter()
-        from searty_spark.champions import write_champions
-
-        n_ch = write_champions(
-            load_segments(spark, out_dir), out_dir, stats["n_docs"], stats["avgdl"],
-            dictionary=dictionary,
-            seg_fp=fp,
-        )
-        _commit(out_dir, "champions", wall_sec=time.perf_counter() - t0, rows=n_ch)
-
-    if need_dict and need_champ:
-        # Both stages derive independently from the WRITTEN segments
-        # (head selection can sum per-shard df from the segment rows
-        # directly — the same df_global the dictionary materializes —
-        # and the champion meta stamp recomputes the segment
-        # fingerprint in its own thread), so they overlap (guide §2.6).
-        # nb: write_champions flips AQE/shuffle-partition conf around
-        # its bounded write; the dictionary job is a small aggregation
-        # for which those settings are immaterial either way.
-        with cf.ThreadPoolExecutor(max_workers=2) as pool:
-            f_dict = pool.submit(run_dictionary)
-            f_champ = pool.submit(run_champions, None, None)
-            f_champ.result()
-            seg_fp = f_dict.result()
-    else:
-        if need_dict:
-            seg_fp = run_dictionary()
-        elif resume:
-            seg_fp = _unit_metric(out_dir, "dictionary", "segment_fp")
-        if need_champ:
-            run_champions(spark.read.parquet(str(out / "dictionary")), seg_fp)
-    return {"stats": stats, "units": metrics}
+    # --- the stage table --------------------------------------------------
+    # docstats, the symbol writes, documents and the first segment batch
+    # are pure functions of the corpus over disjoint subtrees, so they
+    # start together and back-fill each other's stragglers (guide §2.6).
+    # Segment batches run one after another: the default is ONE batch
+    # covering every shard; shard_batch < n_shards trades throughput for
+    # finer resume granularity (at 10^12 docs a batch is the unit a
+    # preempted cluster re-runs). The TRIGRAM token stream derives from
+    # the corpus alone (doc_len is an expression over text); the lisp
+    # token lengths JOIN the docstats table, so its first batch waits.
+    stages: list = [("docstats", (), docstats)]
+    if "lang" in corpus.columns:
+        stages += [("symbols", (), fn) for fn in (write_entity, write_defs, write_packages)]
+    if store_docs:
+        stages.append(("documents", (), write_documents))
+    batch = shard_batch or n_shards
+    prev = ("docstats",) if analyzer == "lisp" else ()
+    seg_units = []
+    for lo in range(0, n_shards, batch):
+        hi = min(lo + batch, n_shards)
+        unit = f"segments/shards={lo}-{hi - 1}"
+        stages.append((unit, prev, lambda lo=lo, hi=hi: write_segments(lo, hi)))
+        seg_units.append(unit)
+        prev = (unit,)
+    if not done.issuperset(seg_units):
+        # Overlap Python-worker spin-up with the pure-JVM early stages:
+        # the first applyInPandas stage (segments) otherwise pays daemon
+        # fork + numpy/pandas import for every core inside its own wall.
+        # One trivial mapInPandas job across the session's cores leaves
+        # the worker pool warm (spark.python.worker.reuse); job groups
+        # are thread-local, so it never relabels another stage's jobs.
+        stages.append((None, (), lambda: _prewarm_python_workers(spark)))
+    # dictionary ∥ champions last: write_champions flips AQE/shuffle
+    # conf session-wide, so nothing but the dictionary may overlap it
+    stages += derived_stages(spark, out_dir, after=[u for u, _, _ in stages if u])
+    walls = run_stages(stages, done, out_dir)
+    return {"stats": load_stats(out_dir), "units": walls}
 
 
 def load_segments(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -591,86 +517,6 @@ def load_stats(index_dir: str) -> dict:
             "its sources); resuming a foreign-format checkpoint is unsafe"
         )
     return stats
-
-
-def upgrade_index(spark: SparkSession, old_dir: str, out_dir: str) -> dict:
-    """Re-encode a format-1 index (round-1 layout: df_global +
-    block_max_impact baked into segment rows) as a current format-2
-    index, without the corpus — the alternative to load_stats'
-    fail-fast-and-rebuild when the source documents are gone.
-
-    The posting BLOBS are layout-identical across the two formats
-    (``n, doc_delta*n, tf*n, doc_len*n`` score stream + the positions
-    stream); only the row metadata changed. Each (shard, bucket) group
-    therefore runs the MERGE kernel as a merge-of-one
-    (merge.merge_segment_group): decode once, re-encode stats-free —
-    the baked-in columns are simply not re-emitted, block_min_dl is
-    computed from the decoded doc_lens. Deterministic encode order
-    makes the result byte-identical to a fresh format-2 build of the
-    same corpus (tested). Dictionary and champion sidecar re-derive
-    exactly as write_index's stage 3/4 do; docstats and the symbol
-    sidecar (if any) copy through unchanged.
-    """
-    import shutil
-
-    old = Path(old_dir)
-    out = Path(out_dir)
-    stats = json.loads((old / "stats.json").read_text())
-    fmt = stats.get("format", 1)
-    if fmt == INDEX_FORMAT:
-        raise ValueError(f"{old_dir} is already format {INDEX_FORMAT}")
-    if fmt != 1:
-        raise ValueError(f"{old_dir} is format {fmt}; upgrade reads format 1 only")
-
-    from searty_spark.merge import merge_segment_group
-    from searty_spark.segments import SEGMENT_SCHEMA
-
-    segs = spark.read.parquet(str(old / "segments"))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return merge_segment_group(pdf)
-
-    out.mkdir(parents=True, exist_ok=True)
-    upgraded = segs.groupBy("shard", "bucket").applyInPandas(run, SEGMENT_SCHEMA)
-    upgraded.write.partitionBy("shard", "bucket").mode("overwrite").parquet(
-        str(out / "segments")
-    )
-
-    new_stats = {
-        "format": INDEX_FORMAT,
-        # format 1 predates the Lisp analyzer: trigram is the only
-        # tokenizer that ever wrote it
-        "analyzer": stats.get("analyzer", "trigram"),
-        "n_docs": stats["n_docs"],
-        "sum_dl": stats["sum_dl"],
-        "avgdl": stats["avgdl"],
-        "n_shards": stats["n_shards"],
-        "n_buckets": stats["n_buckets"],
-    }
-    (out / "stats.json").write_text(json.dumps(new_stats))
-
-    # sidecars that don't depend on the segment layout: copy through
-    for name in ("docstats", "documents", "symbols", "packages",
-                 "symbol_definitions", "package_definitions"):
-        if (old / name).exists() and not (out / name).exists():
-            shutil.copytree(old / name, out / name)
-
-    # derived tables: same derivations as write_index stages 3-4
-    d = (
-        load_segments(spark, str(out))
-        .groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df_global"))
-        .select("term", F.xxhash64("term").alias("token_id"), "df_global")
-    )
-    d.write.mode("overwrite").parquet(str(out / "dictionary"))
-    from searty_spark.champions import write_champions
-
-    write_champions(
-        load_segments(spark, str(out)), str(out),
-        new_stats["n_docs"], new_stats["avgdl"],
-        dictionary=spark.read.parquet(str(out / "dictionary")),
-    )
-    return new_stats
 
 
 def query_symbols(spark: SparkSession, index_dir: str, query: str) -> DataFrame:

@@ -33,7 +33,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searty_spark.index import INDEX_FORMAT, load_segments, load_stats
+from searty_spark.index import (
+    INDEX_FORMAT,
+    derived_stages,
+    load_segments,
+    load_stats,
+    run_stages,
+)
 from searty_spark.segments import (
     SEGMENT_COLS,
     SEGMENT_SCHEMA,
@@ -197,33 +203,23 @@ def merge_indexes(
     }
     (out / "stats.json").write_text(json.dumps(stats))
 
-    # docstats + dictionary follow by union / re-aggregation
+    # docstats follow by union
     ds = None
     for d in index_dirs:
         x = parts[d]
         ds = x if ds is None else ds.unionByName(x)
     ds.write.mode("overwrite").parquet(str(out / "docstats"))
-    dct = segs.groupBy("term").agg(F.sum("df").cast("long").alias("df_global")).select(
-        "term", F.xxhash64("term").alias("token_id"), "df_global"
-    )
-    dct.write.mode("overwrite").parquet(str(out / "dictionary"))
 
-    # champion sidecar: re-derived from the MERGED segments under the
-    # merged stats — identical to a single-shot build's sidecar (the
-    # sidecar is a pure function of segments + (n_docs, avgdl)).
-    # derive_champions=False is for INTERMEDIATE compaction tiers
-    # (compact_partials): a tier's sidecar would be discarded by the
-    # next merge anyway, so skipping it removes a head-term decode skim
-    # per tier from the continuous-ingest path. A skipped tier simply
-    # has no champions dir — ChampionClient degrades to theta0=0 if
-    # queried directly, still exact.
-    if derive_champions:
-        from searty_spark.champions import write_champions
-
-        write_champions(
-            load_segments(spark, out_dir), out_dir, n_docs, avgdl,
-            dictionary=spark.read.parquet(str(out / "dictionary")),
-        )
+    # dictionary ∥ champion sidecar, re-derived from the MERGED segments
+    # under the merged stats exactly as write_index derives them — so
+    # identical to a single-shot build's (both are pure functions of
+    # segments + (n_docs, avgdl)). derive_champions=False is for
+    # INTERMEDIATE compaction tiers (compact_partials): a tier's sidecar
+    # would be discarded by the next merge anyway, so skipping it
+    # removes a head-term decode skim per tier from the continuous-ingest
+    # path. A skipped tier simply has no champions dir — ChampionClient
+    # degrades to theta0=0 if queried directly, still exact.
+    run_stages(derived_stages(spark, out_dir, champions=derive_champions))
 
     # --- symbol/package metadata (ref merge.go:240-309, M4) -------------
     # Entity ids are content hashes (md5 of name), identical across
@@ -326,20 +322,9 @@ def _merge_dedup(
     }
     (out / "stats.json").write_text(json.dumps(stats))
     survivors.write.mode("overwrite").parquet(str(out / "docstats"))
-    # dictionary from the tiny MERGED segment-row table on disk — not
-    # from `flat`, which would re-run the whole decode pipeline
-    load_segments(spark, out_dir).groupBy("term").agg(
-        F.sum("df").cast("long").alias("df_global")
-    ).select(
-        "term", F.xxhash64("term").alias("token_id"), "df_global"
-    ).write.mode("overwrite").parquet(str(out / "dictionary"))
-    if derive_champions:
-        from searty_spark.champions import write_champions
-
-        write_champions(
-            load_segments(spark, out_dir), out_dir, n_docs, avgdl,
-            dictionary=spark.read.parquet(str(out / "dictionary")),
-        )
+    # dictionary + champions from the tiny MERGED segment-row table on
+    # disk — not from `flat`, which would re-run the whole decode pipeline
+    run_stages(derived_stages(spark, out_dir, champions=derive_champions))
 
     # sidecar: definitions are doc-keyed facts -> drop losers' rows;
     # entities re-derive from the surviving facts / surviving docs so
